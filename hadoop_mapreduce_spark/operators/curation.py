@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_mapreduce_spark.functions.timeutil import wall_epoch_us
-from hadoop_mapreduce_spark.sources.tables import load_table
+from hadoop_mapreduce_spark.sources.tables import (drop_temp_view, load_table,
+                                                   temp_view_name)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -314,13 +315,21 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # backing join would otherwise re-execute per reference — at scale
     # that is three passes over the corpus-sized assignment, for a
     # cache of one (doc_id, 2 splits, comp) row per doc.
-    assigned = scoped_persist(comp.select(
+    # The buckets are computed once in their own projection: inlined
+    # into both CASE arms they become two common subexpressions of equal
+    # height, whose order in the generated code follows the hash of
+    # their attributes' expression ids, so a rebuild of the same plan
+    # could generate different code and miss the codegen cache.
+    bucketed = comp.select("doc_id", "comp",
+                           bucket(F.col("doc_id")).alias("b_doc"),
+                           bucket(F.col("comp")).alias("b_comp"))
+    assigned = scoped_persist(bucketed.select(
         "doc_id",
-        F.when(bucket(F.col("doc_id")) < 8, "train")
-        .when(bucket(F.col("doc_id")) < 9, "val")
+        F.when(F.col("b_doc") < 8, "train")
+        .when(F.col("b_doc") < 9, "val")
         .otherwise("test").alias("naive_split"),
-        F.when(bucket(F.col("comp")) < 8, "train")
-        .when(bucket(F.col("comp")) < 9, "val")
+        F.when(F.col("b_comp") < 8, "train")
+        .when(F.col("b_comp") < 9, "val")
         .otherwise("test").alias("grouped_split"),
         "comp",
     ))
@@ -339,8 +348,8 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
     # unchanged: the old counts aggregate already paid countDistinct's
     # Expand over the corpus-sized assignment; the union only adds the
     # tiny pair rows to that stream.
-    va = f"__slg_assigned_{id(assigned) & 0xffff:x}"
-    vp = f"__slg_pairs_{id(pairs) & 0xffff:x}"
+    va = temp_view_name("slg_assigned")
+    vp = temp_view_name("slg_pairs")
     assigned.createOrReplaceTempView(va)
     pairs.createOrReplaceTempView(vp)
     out = spark.sql(f"""
@@ -373,10 +382,7 @@ def split_leakage_guard(spark: SparkSession, sf_dir: str,
         FROM u
     """)
     for v in (va, vp):
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:  # noqa: BLE001 — view is a naming handle only
-            pass
+        drop_temp_view(spark, v)
     return out
 
 

@@ -33,26 +33,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hadoop_mapreduce_spark.sources.tables import load_table
+from hadoop_mapreduce_spark.sources.tables import (drop_temp_view, load_table,
+                                                   temp_view_name)
 
 # 60-bit hashes: 15 hex chars always fit a signed int64 in every engine.
 _HEX_LEN = 15
-
-# Session-scoped temp-view names for the star-CC per-round SQL builds —
-# a counter (not a fixed name) so two CC invocations in one session can
-# never collide on the handle.
-import itertools as _itertools
-
-_cc_star_views = _itertools.count()
-
-
-def _drop_view(spark: SparkSession, name: str) -> None:
-    """Best-effort temp-view cleanup (the view is a naming handle only)."""
-    try:
-        spark.catalog.dropTempView(name)
-    except Exception:  # noqa: BLE001 — cleanup must never mask results
-        pass
-
 
 def _h60(col: Column, seed: int | None = None) -> Column:
     """Deterministic 60-bit hash of a string column (md5-derived).
@@ -111,17 +96,6 @@ def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         F.explode(F.sequence(F.lit(1), F.size("__t") - F.lit(shingle_k - 1))).alias("i"),
     ).select("id", F.concat_ws(" ", F.slice("__t", F.col("i"), shingle_k)).alias("s"))
     return rows.dropDuplicates(["id", "s"]) if distinct else rows
-
-
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 shingle_k: int = 3) -> DataFrame:
-    """(id, sh: array<string>) — distinct shingle set per doc (built from
-    shingle_rows; order is irrelevant to the set-algebra consumers)."""
-    return (
-        shingle_rows(docs, id_col, text_col, shingle_k, distinct=False)
-        .groupBy("id")
-        .agg(F.collect_set("s").alias("sh"))
-    )
 
 
 def hashed_shingle_rows(docs: DataFrame, id_col: str = "doc_id",
@@ -1070,7 +1044,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
     # parse produces the IDENTICAL plan (same window-min passes, same
     # single end-of-round distinct, same one-aggregation stop test) in
     # one py4j call.
-    view = f"__cc_star_{next(_cc_star_views)}"
+    view = temp_view_name("cc_star")
     # --- large-star over the symmetric neighbourhood: every node u
     #     attaches its strictly-larger neighbours v to
     #     m(u) = min(Γ(u) ∪ {u}); no mid-round distinct — duplicate
@@ -1141,14 +1115,14 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame,
             n_edges = stats.ne or 0
             break
     else:
-        _drop_view(spark, view)
+        drop_temp_view(spark, view)
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} "
             f"rounds — pathological edge set (rounds needed is O(log n), "
             f"so this indicates a bug, not a deep graph)")
     # The temp view is only a naming handle for the per-round SQL; the
     # returned plan is bound to the checkpointed RDDs, not the view.
-    _drop_view(spark, view)
+    drop_temp_view(spark, view)
     # The star forest has one row per non-root duplicate — orders of
     # magnitude smaller than the corpus for any real dup rate. The
     # checkpointed RDD hides its size from the planner (leaf default

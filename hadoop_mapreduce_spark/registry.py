@@ -1360,7 +1360,7 @@ SELECT 'hour' AS resolution, bucket_id, event_type, n,
   (sm // n)::BIGINT AS avg_value_micros
 FROM hourly
 UNION ALL
-SELECT 'day', day_id, event_type, sum(n), (sum(sm) // 10000)::BIGINT,
+SELECT 'day', day_id, event_type, sum(n)::BIGINT, (sum(sm) // 10000)::BIGINT,
   (sum(sm) // sum(n))::BIGINT
 FROM hourly GROUP BY day_id, event_type
 ORDER BY resolution, bucket_id, event_type

@@ -5,6 +5,32 @@ the right default on a real multi-executor cluster too: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), broadcast joins
 enabled with a sane threshold, Arrow for any pandas-UDF exchange, and
 shuffle partitions sized for the local fixture scale (overridable).
+
+Generated-code cache. Spark keeps the classes Janino compiles for
+whole-stage codegen in a cache keyed by generated source
+(``spark.sql.codegen.cache.maxEntries``, a static conf, default 100).
+This engine's working set is larger than that (measured on 4 cores):
+one round of the perfbench ``dedup_guard`` workload generates 186-192
+distinct classes (``dedup_components_star`` alone about 100), and one
+round of ``bench.py``'s 27 headline queries at sf0.01 generates 462-508
+(the lower figures with stage ids out of the class names, below). With
+100 entries the cache evicts in a cycle and every warm run compiles its
+whole-stage code again: 181-186 compiles per warm ``dedup_guard`` round,
+700 per warm headline round. A compiled entry costs 12-23 KB of
+metaspace (metaspace growth per recompile at 100 entries), so
+``CODEGEN_CACHE_ENTRIES`` = 2048, four times the largest measured
+working set, bounds the cache at under 50 MB. The value is a constant,
+not an option: it follows from the engine's own plan shapes, not from
+the data or the cluster, and a caller that needs another size can pass
+it through ``extra_conf``. The cache holds compiled code only, never
+data or results.
+
+The cache only helps if a rebuilt plan generates the same source. By
+default Spark names each generated class after its whole-stage codegen
+stage id, and under AQE that id follows the order in which query stages
+happen to finish (seen on ``pipeline_pretrain``: two aggregation stages
+swapped ids between runs and recompiled). ``useIdInClassName`` is
+therefore off; the id still shows in plans as ``*(n)``.
 """
 
 from __future__ import annotations
@@ -12,6 +38,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Measured working sets (module docstring): 186-192 classes per
+# dedup_guard round, 462-508 per headline round at sf0.01; 12-23 KB of
+# metaspace per class.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -50,6 +81,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- deterministic timestamps across engines ---
         .config("spark.sql.session.timeZone", "UTC")
+        # --- compiled whole-stage code survives across queries ---
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
+        # keep the stage id out of the generated class name, so the same
+        # stage hits the cache whatever id AQE happened to assign it
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # keep the UI off in test/bench runs: less overhead, no port races
         .config("spark.ui.enabled", "false")
     )

@@ -9,6 +9,7 @@ custom source machinery is warranted.
 
 from __future__ import annotations
 
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -186,11 +187,24 @@ def sql_view(spark: SparkSession, sf_dir: str, name: str) -> str:
     return view
 
 
-def read_text_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text source — the reference's only input format
-    (reference WordCount.java:157, TextInputFormat). One row per line,
-    column ``value: string``."""
-    return spark.read.text(path)
+_temp_views = itertools.count()
+
+
+def temp_view_name(prefix: str) -> str:
+    """A process-unique temp-view name, ``__<prefix>_<n>``. One counter
+    serves every operator, so two handles can never collide."""
+    return f"__{prefix}_{next(_temp_views)}"
+
+
+def drop_temp_view(spark: SparkSession, name: str) -> None:
+    """Best-effort temp-view cleanup. Operators that drop a view before
+    their returned DataFrame runs rely on classic-mode eager analysis:
+    the DataFrame's plan is already resolved and no longer names the
+    view."""
+    try:
+        spark.catalog.dropTempView(name)
+    except Exception:  # noqa: BLE001 — cleanup must never mask results
+        pass
 
 
 def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:

@@ -7,6 +7,10 @@ import pytest
 # Smaller parallelism for the tiny test datasets: 32-thread scheduling
 # overhead dominates otherwise. Must be set before the first get_spark().
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+# The session's 32g default heap lets G1 grow the one test JVM past the
+# memory of a small box (seen: killed at 15.5 GB RSS on a 16 GB machine);
+# the sf0.001 fixtures need a small fraction of this.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 SF_DIR = "/root/testdata/sf0.001"
 

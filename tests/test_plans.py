@@ -209,3 +209,29 @@ def test_neardup_pairs_join_keyed_on_fingerprint(spark):
     text = static_plan_text(winnowing_neardup_pairs(spark, SF_DIR))
     assert "CartesianProduct" not in text
     assert "LeftAnti" in text
+
+
+def test_warm_rerun_compiles_no_generated_code(spark):
+    """A second run of the same queries reuses every whole-stage class the
+    first run compiled: the codegen cache holds the engine's working set
+    (session.CODEGEN_CACHE_ENTRIES). These two queries generate about
+    200 classes, which overflows Spark's default 100-entry cache."""
+    from hadoop_mapreduce_spark.registry import QUERIES
+    from hadoop_mapreduce_spark.session import release_caches
+
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def one_pass():
+        for name in ("dedup_components_star", "split_leakage_guard"):
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
+                "overwrite").save()
+            release_caches()
+
+    # Earlier tests leave scoped caches registered; a pass that releases
+    # them mid-way would plan its later queries differently from the next.
+    release_caches()
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0
